@@ -9,7 +9,9 @@ or locally:
     python -m pbx_ds_ocr_server_spark.job --input ... --output ...
 
 The input must carry (url:string, html:binary); extra columns are pruned.
-Prints one JSON summary line on completion.
+The output must be a POSIX path (a shared mount on a cluster): the job's
+bookkeeping files are driver-local writes. Prints one JSON summary line on
+completion; exits 2 on a missing input column or a URI output.
 """
 
 from __future__ import annotations
@@ -20,7 +22,10 @@ import sys
 
 from pbx_ds_ocr_server_spark.config import ExtractConfig
 from pbx_ds_ocr_server_spark.session import get_spark
-from pbx_ds_ocr_server_spark.sources.writer import run_extract_job
+from pbx_ds_ocr_server_spark.sources.writer import (
+    require_local_path,
+    run_extract_job,
+)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -43,6 +48,13 @@ def main(argv: list[str] | None = None) -> int:
     if args.page_ranges is not None:
         cfg_kwargs["page_ranges"] = args.page_ranges
     cfg = ExtractConfig(**cfg_kwargs)
+    try:
+        # checked before the session starts: run_extract_job would raise the
+        # same error, after paying the Spark start-up
+        require_local_path(args.output)
+    except ValueError as exc:
+        print(f"error: {exc}", file=sys.stderr)
+        return 2
 
     spark = get_spark(master=args.master)
     try:

@@ -243,3 +243,151 @@ def test_corrupt_staging_marker_raises_diagnostic(spark, corpus, tmp_path):
         f.write("1")  # torn prefix of a larger legacy count
     with pytest.raises(ValueError, match="corrupt marker"):
         run_extract_job(spark, corpus, out, run_id="r3", n_buckets=1)
+
+
+def test_remote_output_uri_is_rejected_before_staging(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """The manifest, _STAGED marker, lineage and metrics are driver-local
+    file writes: a URI output would put them in a local dir named 's3:'."""
+    monkeypatch.chdir(tmp_path)
+    for uri, scheme in (("s3://bucket/out", "s3"), ("hdfs://nn/out", "hdfs")):
+        with pytest.raises(ValueError, match=f"scheme '{scheme}'"):
+            run_extract_job(spark, corpus, uri, run_id="rU", n_buckets=2)
+    assert list(tmp_path.iterdir()) == []
+
+
+# the lineage category of every status extract emits; a new status fails
+# the count test below until it is placed here
+_CATEGORY = {
+    "succeeded": "n_succeeded",
+    "succeeded_empty": "n_succeeded",
+    "succeeded_partial": "n_succeeded",
+    "succeeded_noop": "n_noop",
+    "rejected_size": "n_rejected",
+    "rejected_pages": "n_rejected",
+    "rejected_unparseable": "n_rejected",
+    "failed": "n_failed",
+}
+
+
+def test_lineage_counts_match_output(spark, corpus, tmp_path):
+    """Lineage counts come from the bucket write's observed metrics, not a
+    read-back: they must equal the output's own per-bucket counts, empty
+    buckets included (one url per status, twice as many buckets as urls)."""
+    per_status = extract(corpus).groupBy("status").agg(F.min("url").alias("url"))
+    urls = [r.url for r in per_status.collect()]
+    small = corpus.join(
+        spark.createDataFrame([(u,) for u in urls], "url string"), "url"
+    )
+    n_buckets = 2 * len(urls)
+    out = str(tmp_path / "counts")
+    run_extract_job(spark, small, out, run_id="rk", n_buckets=n_buckets)
+
+    want = {
+        b: dict.fromkeys(["n_urls", *sorted(set(_CATEGORY.values()))], 0)
+        for b in range(n_buckets)
+    }
+    for r in read_output(spark, out).select("bucket", "status").collect():
+        want[r.bucket]["n_urls"] += 1
+        want[r.bucket][_CATEGORY[r.status]] += 1
+    got = {
+        r.bucket: {k: r[k] for k in want[0]}
+        for r in read_lineage(spark, out).collect()
+    }
+    assert got == want
+    assert any(c["n_urls"] == 0 for c in want.values())  # empty buckets
+    assert sum(c["n_urls"] for c in want.values()) == len(urls)
+
+
+def _spark_job_ids(spark) -> set[int]:
+    sc = spark.sparkContext
+    # the status tracker is fed from the listener bus asynchronously; drain
+    # it (a JVM-internal call, reachable through py4j) before reading
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def test_each_bucket_costs_only_its_write_job(spark, corpus, tmp_path):
+    """Regression guard: bookkeeping (status counts, lineage, metrics,
+    manifest) launches no Spark job, so a bucket adds exactly one job — its
+    data write — and a run adds a fixed number for staging."""
+    small = corpus.filter(F.xxhash64("url") % 8 == 0)
+    jobs = {}
+    for n_buckets in (2, 5):
+        before = _spark_job_ids(spark)
+        run_extract_job(
+            spark, small, str(tmp_path / f"b{n_buckets}"), n_buckets=n_buckets
+        )
+        jobs[n_buckets] = len(_spark_job_ids(spark) - before)
+    assert jobs[5] - jobs[2] == 5 - 2
+    assert jobs == {2: 5, 5: 8}  # 3 staging jobs + one write per bucket
+
+
+def test_failed_bucket_records_lineage_row(spark, corpus, tmp_path):
+    """A bucket that raises leaves a 'failed' lineage row with the error and
+    NULL counts, is not marked complete, and a clean re-stage finishes it."""
+    import glob
+    import os
+    import shutil
+
+    out = str(tmp_path / "failed_bucket")
+    run_extract_job(spark, corpus, out, run_id="r1", n_buckets=4, fail_after=1)
+    staging = os.path.join(out, "staging")
+    bad = next(  # bucket 0 completed above
+        b for b in (1, 2, 3) if os.path.isdir(f"{staging}/bucket={b}")
+    )
+    for part in glob.glob(os.path.join(staging, f"bucket={bad}", "*.parquet")):
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_extract_job(spark, corpus, out, run_id="r2", n_buckets=4)
+
+    rows = {(r.run_id, r.bucket): r for r in read_lineage(spark, out).collect()}
+    failed = rows[("r2", bad)]
+    assert failed.status == "failed" and f"bucket={bad}" in failed.error
+    assert failed.n_urls is None and failed.n_succeeded is None
+    manifest = CheckpointManifest(os.path.join(out, "manifest.json"))
+    assert manifest.completed() == set(range(4)) - {bad}
+    succeeded = {b for (_, b), r in rows.items() if r.status == "succeeded"}
+    assert succeeded == set(range(4)) - {bad}
+
+    shutil.rmtree(staging)
+    third = run_extract_job(spark, corpus, out, run_id="r3", n_buckets=4)
+    assert third.buckets_done == [bad]
+    got = read_output(spark, out)
+    assert got.count() == corpus.count()
+    assert got.groupBy("url").count().filter("count > 1").count() == 0
+
+
+def test_resume_into_spark_appended_lineage_dir(spark, corpus, tmp_path):
+    """Lineage dirs from earlier versions hold Spark-appended part files
+    (v1: no html_backend column). A resume adds per-bucket pyarrow files
+    next to them, and read_lineage returns both through mergeSchema."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "mixed_lineage")
+    lineage_dir = os.path.join(out, "_lineage")
+    run_extract_job(spark, corpus, out, run_id="r1", n_buckets=4, fail_after=1)
+    # rewrite r1's row the way the v1 writer stored it
+    (r1_file,) = os.listdir(lineage_dir)
+    r1_path = os.path.join(lineage_dir, r1_file)
+    row = pq.read_table(r1_path).drop(["html_backend"])
+    os.remove(r1_path)
+    spark.createDataFrame(
+        row.to_pylist(),
+        "run_id string, bucket int, n_urls long, n_succeeded long,"
+        " n_noop long, n_rejected long, n_failed long,"
+        " started_at double, finished_at double, status string, error string",
+    ).coalesce(1).write.mode("append").parquet(lineage_dir)
+
+    run_extract_job(spark, corpus, out, run_id="r2", n_buckets=4)
+    files = [f for f in os.listdir(lineage_dir) if f.endswith(".parquet")]
+    assert len([f for f in files if f.startswith("part-r2-")]) == 3
+    assert len([f for f in files if not f.startswith("part-r2-")]) == 1
+    lin = read_lineage(spark, out).collect()
+    assert {r.bucket for r in lin} == set(range(4))
+    legacy = {r.run_id: r.html_backend is None for r in lin}
+    assert legacy == {"r1": True, "r2": False}
