@@ -1,35 +1,36 @@
 """The extraction pipeline as Spark operators.
 
-Maps the reference's per-job dataflow (SURVEY.md §3 EP1) onto a declarative
-plan:
+Maps the reference's per-job dataflow (SURVEY.md §3 EP1) onto ONE
+``mapInPandas`` pass over the ``(url, html)`` columns:
 
   read table
-    → [one pass] mapInPandas validate + dispatch + per-page extract   (§2.1-2.4)
-    → window over (url, seq): re-base span offsets to document offsets
-    → groupBy(url) assembly agg: ordered text merge + span flatten    (§2.5)
+    → validate + dispatch + per-page extract         (§2.1-2.4, _extract_one)
+    → per-document assembly: ordered text merge +
+      span re-base to document offsets                (§2.5, _assemble_one)
+
+``extract`` runs both steps in the pass and emits one row per input row;
+``extract_pages`` stops after the first and emits one row per page, the
+input of ``assemble_layout_json`` and of ``assemble_documents`` (the JVM
+reference assembly the fused one is tested against).
 
 Design notes for 100 TB scale:
-  * Validation, content-type sniff (S4/S5), size/page predicates (F1/F2) and
-    extraction (T6) run in ONE ``mapInPandas`` pass so the heavy ``html``
-    binary column is scanned exactly once and never shuffled — only the
-    (small) extracted page rows cross the wire.
+  * Validation, content-type sniff (S4/S5), size/page predicates (F1/F2),
+    extraction (T6) and assembly run in the same pass, so the heavy
+    ``html`` binary column is scanned exactly once and the plan has no
+    Exchange — pages of a document are born co-located.
   * Rejected rows are never dropped: they surface as page_index=0 rows with a
     ``status`` (→ lineage), mirroring the reference's failed-job statuses
     (``/root/reference/app/schemas.py:10-16``).
-  * The window and the final groupBy share the same hash partitioning on
-    ``url``; Catalyst performs ONE shuffle for both (partial aggregation is
-    not needed since rows per url ≤ max_pages and the window already
-    co-located them).
   * Skew (giant docs / hot hosts) is handled WITHOUT shuffling payloads:
-    storage-layer bucketing (sources/writer.py staging), small input splits
-    (files.maxPartitionBytes), small Arrow batches, and AQE. An explicit
-    pre-extraction salt (operators/salting.py) is available but opt-in —
-    measured, a payload shuffle costs ~3× end-to-end (SURVEY.md §4).
+    the job runner's bucketed staging write (sources/writer.py), small
+    input splits (files.maxPartitionBytes), small Arrow batches, and AQE.
+    A pre-extraction repartition of the payloads measured ~3× slower
+    end-to-end (SURVEY.md §4).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -48,8 +49,11 @@ from pbx_ds_ocr_server_spark.kernels.pdf_extract import (
     pdf_is_encrypted,
     pdf_title,
 )
+from pbx_ds_ocr_server_spark.kernels.pdf_fonts import (
+    cid_tables_snapshot,
+    restore_cid_tables,
+)
 from pbx_ds_ocr_server_spark.kernels.raster_meta import extract_raster_meta
-from pbx_ds_ocr_server_spark.operators.salting import salt_partitions
 
 SPAN_STRUCT = (
     "struct<page_index:int,kind:string,bbox:array<double>,"
@@ -64,6 +68,14 @@ DOCS_SCHEMA = (
     f"url string, text string, spans array<{SPAN_STRUCT}>, n_pages int,"
     " title string, content_type string, status string, error string"
 )
+_PAGE_COLS = [
+    "url", "content_type", "n_pages", "seq", "page_index",
+    "page_text", "spans", "title", "status", "error",
+]
+_DOC_COLS = [
+    "url", "text", "spans", "n_pages", "title", "content_type",
+    "status", "error",
+]
 
 # JobStatus analog (/root/reference/app/schemas.py:10-16) + rejection reasons
 ST_OK = "succeeded"
@@ -174,47 +186,43 @@ def _extract_one(url: str, payload: bytes, cfg: ExtractConfig) -> list[dict]:
                      error=f"{type(exc).__name__}: {exc}")]
 
 
-def extract_pages(
-    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, salted: bool = False
+def _map_documents(
+    df: DataFrame,
+    rows_of: Callable[[str, bytes], Iterable[dict]],
+    cols: list[str],
+    schema: str,
 ) -> DataFrame:
-    """(url, html, ...) → one row per (url, page). Single pass over payloads.
-
-    ``salted=False`` by default: a pre-extraction repartition would SHUFFLE
-    the raw payload bytes — measured ~3× slower end-to-end and flat scaling
-    (the blob shuffle serializes on shuffle I/O). Payload rebalancing belongs
-    at the storage layer (the job runner's bucketed staging write,
-    sources/writer.py) or to AQE skew splitting; pass ``salted=True`` only
-    when the input layout itself is pathologically skewed and cannot be
-    re-staged.
-    """
-    src = df.select("url", "html")
-    if salted:
-        src = salt_partitions(src)
+    """The one extraction pass: a ``mapInPandas`` over ``df``'s
+    ``(url, html)`` in which ``rows_of(url, html)`` gives each document's
+    output rows (columns ``cols``, Spark schema ``schema``)."""
     # deploy-time CID tables are a DRIVER-process registration; snapshot
     # them into the task closure so the executors' fresh module imports
     # see them too (kernels/pdf_fonts.cid_tables_snapshot docstring)
-    from pbx_ds_ocr_server_spark.kernels.pdf_fonts import (
-        cid_tables_snapshot,
-        restore_cid_tables,
-    )
-
     cid_tables = cid_tables_snapshot()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # unconditional: reused workers may hold a PREVIOUS plan's tables,
         # and an empty snapshot must clear them (restore_cid_tables doc)
         restore_cid_tables(cid_tables)
-        cols = [
-            "url", "content_type", "n_pages", "seq", "page_index",
-            "page_text", "spans", "title", "status", "error",
-        ]
         for pdf_batch in batches:
             out: list[dict] = []
             for r in pdf_batch.itertuples():
-                out.extend(_extract_one(r.url, r.html, cfg))
+                out.extend(rows_of(r.url, r.html))
             yield pd.DataFrame(out, columns=cols)
 
-    return src.mapInPandas(run, schema=PAGES_SCHEMA)
+    return df.select("url", "html").mapInPandas(run, schema=schema)
+
+
+def extract_pages(
+    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
+) -> DataFrame:
+    """(url, html, ...) → one row per (url, page). Single pass over payloads,
+    no shuffle; feeds ``assemble_layout_json`` and the reference assembly
+    ``assemble_documents``."""
+    return _map_documents(
+        df, lambda url, html: _extract_one(url, html, cfg),
+        _PAGE_COLS, PAGES_SCHEMA,
+    )
 
 
 def assemble_documents(
@@ -367,9 +375,10 @@ def keep_latest_snapshot(df: DataFrame, ts_col: str = "warc_ts") -> DataFrame:
     )
 
 
-# doc-status tie-break among success tiers (see assemble_documents): the
-# BEST page wins; rejections/failures (rank -1) dominate. Shared by the JVM
-# aggregation and the fused Python assembly below — keep in sync.
+# doc-status tie-break among success tiers: the BEST page wins;
+# rejections/failures (rank -1) dominate. Used by the fused assembly only;
+# assemble_documents ranks with its own F.when chain, the independent
+# reference the fused assembly is tested against.
 _STATUS_RANK = {ST_OK: 0, ST_PARTIAL: 1, ST_EMPTY: 2, ST_NOOP: 3}
 
 
@@ -422,50 +431,28 @@ def _assemble_one(rows: list[dict], sep: str, sep_b: int) -> dict:
 
 
 def extract(
-    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG, salted: bool = False
+    df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG
 ) -> DataFrame:
-    """Full pipeline: input table → (url, text, spans, n_pages, content_type,
-    status, error). The library-call analog of the reference's synchronous
-    endpoint (SURVEY.md §3 EP3).
+    """Full pipeline: input table → one row per input row with (url, text,
+    spans, n_pages, title, content_type, status, error). The library-call
+    analog of the reference's synchronous endpoint (SURVEY.md §3 EP3).
 
-    Input must be UNIQUE on url (url ≙ the reference's task_id); for raw
-    crawls with revisits, apply ``keep_latest_snapshot`` first — duplicate
-    urls would otherwise merge into one output row at assembly.
+    Input should be UNIQUE on url (url ≙ the reference's task_id): every
+    input row becomes its own output row, so duplicate urls give duplicate
+    output rows. For raw crawls with revisits, apply
+    ``keep_latest_snapshot`` first.
 
-    FUSED single-pass since round 9: every page of a document is produced by
-    the same ``_extract_one`` call inside the same Arrow batch, so document
-    assembly needs no url shuffle at all — it runs in Python right after
-    extraction and only the finished document rows leave the pass. That
-    removes the one Exchange the pipeline had (the page rows — extracted
-    text + spans — no longer cross the wire; guide rule: when data is
-    already co-located, don't shuffle to "group" it). The composable
-    page-level API (``extract_pages`` → ``assemble_documents``) is unchanged
-    for callers that need page rows; byte-identity of the two assembly paths
-    is pinned by tests/test_extract_e2e.py::test_fused_extract_matches_page_assembly."""
-    src = df.select("url", "html")
-    if salted:
-        src = salt_partitions(src)
-    from pbx_ds_ocr_server_spark.kernels.pdf_fonts import (
-        cid_tables_snapshot,
-        restore_cid_tables,
-    )
-
-    cid_tables = cid_tables_snapshot()
+    Fused single pass: every page of a document comes from the same
+    ``_extract_one`` call, so ``_assemble_one`` assembles the document right
+    there inside the ``mapInPandas`` and only finished document rows leave
+    the pass — the plan has no Exchange. The page path ``extract_pages`` →
+    ``assemble_documents`` is the reference this assembly is checked
+    against: tests/test_extract_e2e.py::test_fused_extract_matches_page_assembly
+    requires identical rows from both."""
     sep = cfg.page_separator
     sep_b = len(sep.encode("utf-8"))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        restore_cid_tables(cid_tables)
-        cols = [
-            "url", "text", "spans", "n_pages", "title", "content_type",
-            "status", "error",
-        ]
-        for pdf_batch in batches:
-            out: list[dict] = []
-            for r in pdf_batch.itertuples():
-                out.append(
-                    _assemble_one(_extract_one(r.url, r.html, cfg), sep, sep_b)
-                )
-            yield pd.DataFrame(out, columns=cols)
+    def rows_of(url: str, html: bytes) -> tuple[dict]:
+        return (_assemble_one(_extract_one(url, html, cfg), sep, sep_b),)
 
-    return src.mapInPandas(run, schema=DOCS_SCHEMA)
+    return _map_documents(df, rows_of, _DOC_COLS, DOCS_SCHEMA)

@@ -17,7 +17,6 @@ def get_spark(
     app_name: str = "pbx-ds-ocr-server-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_max_records: int = 256,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -51,13 +50,12 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Arrow everywhere. Batch size trades python-roundtrip overhead
         # against peak batch bytes: 256 measured ~3x faster than 64 on
-        # few-KB docs; tune DOWN to 64-128 for corpora with multi-MB blobs
-        # so one batch never holds many giants (skew guard, SURVEY.md §4)
+        # few-KB docs; for corpora with multi-MB blobs pass
+        # extra_conf={"spark.sql.execution.arrow.maxRecordsPerBatch": "64"}
+        # (or 128) so one batch never holds many giants (skew guard,
+        # SURVEY.md §4)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(arrow_max_records),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "256")
         # keep scans splittable at ~128MB (tune per input-blob size at scale)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))

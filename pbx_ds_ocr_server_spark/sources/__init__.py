@@ -1,1 +1,1 @@
-"""Sources & sinks: table loaders and the checkpointed resumable writer."""
+"""Sources & sinks: the WARC source and the checkpointed resumable writer."""

@@ -136,6 +136,20 @@ class JobResult:
         return self.docs_out / self.wall_seconds if self.wall_seconds else 0.0
 
 
+def _layout_bucket_count(staging_dir: str) -> int:
+    """Highest bucket id among the staged ``bucket=K`` dirs, plus one (0
+    with none) — a LOWER BOUND on the staged count: top buckets CAN be
+    empty on small inputs."""
+    return max(
+        (
+            int(d.split("=", 1)[1])
+            for d in os.listdir(staging_dir)
+            if d.startswith("bucket=")
+        ),
+        default=-1,
+    ) + 1
+
+
 def stage_input(
     df: DataFrame, staging_dir: str, n_buckets: int
 ) -> None:
@@ -159,22 +173,11 @@ def stage_input(
             raw = f.read().strip()
         if not raw:
             # legacy marker: recover a LOWER BOUND on the count from the
-            # layout (max bucket id + 1; top buckets CAN be empty on small
-            # inputs). derived > requested proves a mismatch → raise
+            # layout. derived > requested proves a mismatch → raise
             # BEFORE touching the marker; derived <= requested is
             # consistent with the request (empty top buckets lose
             # nothing), so record the REQUESTED count.
-            derived = (
-                max(
-                    (
-                        int(d.split("=", 1)[1])
-                        for d in os.listdir(staging_dir)
-                        if d.startswith("bucket=")
-                    ),
-                    default=-1,
-                )
-                + 1
-            )
+            derived = _layout_bucket_count(staging_dir)
             if derived > n_buckets:
                 raise ValueError(
                     f"staging at {staging_dir} has bucket dirs up to"
@@ -202,17 +205,7 @@ def stage_input(
         # legacy (pre-atomic-write) torn write could hold a plausible but
         # SMALLER count ('1' torn from '16'); bucket dirs above it prove
         # the corruption before any resume trusts it
-        layout_hint = (
-            max(
-                (
-                    int(d.split("=", 1)[1])
-                    for d in os.listdir(staging_dir)
-                    if d.startswith("bucket=")
-                ),
-                default=-1,
-            )
-            + 1
-        )
+        layout_hint = _layout_bucket_count(staging_dir)
         if layout_hint > recorded:
             raise ValueError(
                 f"staging marker at {marker} records n_buckets={recorded}"
@@ -367,9 +360,9 @@ def run_extract_job(
         b0 = time.time()
         try:
             obs = Observation()
-            # staging already co-located this bucket; no extra salting shuffle
+            # staging already co-located this bucket; no payload shuffle
             result = extract(
-                staged.filter(F.col("bucket") == bucket), cfg, salted=False
+                staged.filter(F.col("bucket") == bucket), cfg
             ).observe(obs, *_status_counts())
             bucket_path = os.path.join(data_dir, f"bucket={bucket}")
             result.write.mode("overwrite").parquet(bucket_path)  # idempotent

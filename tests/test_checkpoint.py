@@ -110,6 +110,25 @@ def test_concurrent_buckets_complete_and_match(spark, corpus, tmp_path):
     assert {r.bucket for r in lin.collect()} == set(range(4))
 
 
+def test_staging_spreads_hot_host(spark, tmp_path):
+    """The staging write is the one salting mechanism: 400 urls from ONE
+    host (the crawl-clustered worst case) land in every bucket, none hot."""
+    import os
+
+    from pbx_ds_ocr_server_spark.sources.writer import stage_input
+
+    rows = [(f"https://hot.example/{i}", b"<p>x</p>") for i in range(400)]
+    df = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
+    staging = str(tmp_path / "staging")
+    stage_input(df, staging, n_buckets=8)
+    assert sorted(
+        d for d in os.listdir(staging) if d.startswith("bucket=")
+    ) == [f"bucket={k}" for k in range(8)]
+    sizes = spark.read.parquet(staging).groupBy("bucket").count().collect()
+    assert len(sizes) == 8  # every bucket got rows
+    assert max(r["count"] for r in sizes) < 400 * 0.5  # no single hot bucket
+
+
 def test_legacy_empty_staging_marker_resumes_with_warning(spark, corpus, tmp_path):
     import os
     import warnings

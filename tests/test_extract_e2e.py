@@ -155,6 +155,18 @@ def test_keep_latest_snapshot_resolves_revisits(spark):
     assert out.count() == 3
 
 
+def test_duplicate_urls_are_not_merged(spark):
+    """extract() emits one row per INPUT row: url-duplicate input gives
+    duplicate output rows (dedup is keep_latest_snapshot's job)."""
+    df = spark.createDataFrame(
+        [("u:dup", b"<p>first</p>"), ("u:dup", b"<p>second</p>")],
+        "url string, html binary",
+    )
+    rows = extract(df).collect()
+    assert [r.url for r in rows] == ["u:dup", "u:dup"]
+    assert sorted(r.text for r in rows) == ["first", "second"]
+
+
 def test_titles_extracted(result):
     htmls = result.filter(F.col("content_type") == "html")
     assert htmls.filter(F.col("title") == "synthetic page").count() == htmls.count()
@@ -307,13 +319,18 @@ def test_pure_cjk_pdf_class_still_succeeds(spark):
     assert row.status == "succeeded" and row.text != ""
 
 
-def test_registered_cid_tables_reach_spark_workers(spark):
+@pytest.mark.parametrize(
+    "run, text_col",
+    [(extract, "text"), (extract_pages, "page_text")],
+    ids=["extract", "extract_pages"],
+)
+def test_registered_cid_tables_reach_spark_workers(spark, run, text_col):
     """Round-7 review finding: CID-table registration is a DRIVER-process
     module global, but mapInPandas runs in fresh worker interpreters —
     without the snapshot-into-closure replay the deploy seam would work
     in direct kernel calls yet silently do nothing through the real
     Spark path. Registration here happens ONLY driver-side; the worker
-    must see it via the closure."""
+    must see it via the closure, through both entry points."""
     from tests.test_pdf_kernel import _cid_latin_pdf
     from pbx_ds_ocr_server_spark.kernels.pdf_fonts import (
         register_cid_table,
@@ -326,12 +343,12 @@ def test_registered_cid_tables_reach_spark_workers(spark):
     )
     register_cid_table(b"Japan1", {0x2710: "中"})
     try:
-        row = extract(df).first()
+        row = run(df).first()
         assert row.status == "succeeded"
-        assert row.text == "abc中"
+        assert row[text_col] == "abc中"
     finally:
         unregister_cid_table(b"Japan1")
     # seam removed at plan time -> honest partial through the same path
-    row = extract(df).first()
+    row = run(df).first()
     assert row.status == "succeeded_partial"
-    assert row.text == "abc"
+    assert row[text_col] == "abc"

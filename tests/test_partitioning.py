@@ -1,50 +1,4 @@
-"""Salting helpers: spread quality and result-invariance."""
-
-from pyspark.sql import functions as F
-
-from pbx_ds_ocr_server_spark.operators.extract import extract
-from pbx_ds_ocr_server_spark.operators.salting import (
-    salt_partitions,
-    salt_partitions_by_size,
-)
-
-
-def test_salt_spreads_hot_host(spark):
-    # 400 urls from ONE host (the crawl-clustered worst case)
-    rows = [(f"https://hot.example/{i}", b"<p>x</p>") for i in range(400)]
-    df = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
-    salted = salt_partitions(df, num_partitions=8)
-    sizes = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    assert len(sizes) == 8  # every partition got rows
-    assert max(r["count"] for r in sizes) < 400 * 0.5  # no single hot partition
-
-
-def test_salt_by_size_separates_giants(spark):
-    rows = [(f"https://h/{i}", b"x" * 100) for i in range(64)] + [
-        (f"https://h/g{i}", b"y" * 200_000) for i in range(4)
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
-    salted = salt_partitions_by_size(df, giant_bytes=100_000, num_partitions=8)
-    per = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .withColumn("giant", F.octet_length("html") > 100_000)
-        .groupBy("pid")
-        .agg(F.sum(F.col("giant").cast("int")).alias("giants"))
-        .collect()
-    )
-    assert max(r["giants"] for r in per) <= 2  # giants spread, not stacked
-
-
-def test_salting_never_changes_results(spark, corpus):
-    plain = extract(corpus, salted=False).select("url", "text", "status")
-    salted = extract(corpus, salted=True).select("url", "text", "status")
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
+"""partitioning.ensure_min_partitions: fan-out of narrow scans."""
 
 
 def test_ensure_min_partitions_fans_out_scans_not_shuffled_plans(spark, tmp_path):
